@@ -22,6 +22,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from presto_on_ray_spark import store as store_proto
 from presto_on_ray_spark.caching import tracked_persist
 from presto_on_ray_spark.operators._util import t
 from presto_on_ray_spark.suite import query
@@ -1612,6 +1613,20 @@ class BaseIndex(NamedTuple):
 _SAVED_RELATIONS = BaseIndex._fields + ("bands",)
 
 
+def _saved_index_paths(path: str) -> tuple:
+    """(spark_path, os_path) of a saved index the caller will MUTATE:
+    the mutation protocol's swap is a filesystem rename, so the
+    location must be local."""
+    return store_proto.local_paths(
+        path, "saved index",
+        "saved-index mutation (merge_into_saved_index / "
+        "compact_saved_index) uses local filesystem renames. On a shared "
+        "store, write a new generation (build_base_index + "
+        "save_base_index) or keep the index in a transactional table "
+        "format.",
+    )
+
+
 def _ranked_prefix(sh_df, df_rel, tn: int, td: int):
     """Keep each doc's n - ceil(t*n) + 1 rarest shingles under the
     shared (df, sh) order (integer ceil: (tn*n + td - 1) div td).
@@ -1739,13 +1754,7 @@ def save_base_index(
     import os
     import shutil
 
-    try:
-        path, os_path = _index_paths(path)
-    except AmbiguousIndexPath:
-        raise
-    except ValueError:
-        os_path = None
-
+    path, os_path = store_proto.local_paths_or_none(path)
     if os_path is None:
         _write_index_relations(index, path, with_bands)
         return
@@ -1775,20 +1784,15 @@ def save_base_index(
     os.makedirs(os_path, exist_ok=True)
     inprog = os.path.join(os_path, "_MERGE_INPROGRESS")
     try:
-        lock = open(inprog, "x", encoding="utf-8")
+        store_proto.create_marker(
+            inprog, "rebuild (save_base_index) in progress\n"
+        )
     except FileExistsError:
         raise ValueError(
             f"saved index at {path!r}: _MERGE_INPROGRESS appeared while "
             f"acquiring the save lock — a concurrent writer is live; "
             f"retry once it finishes"
         ) from None
-    try:
-        with lock:
-            lock.write("rebuild (save_base_index) in progress\n")
-    except BaseException:
-        with contextlib.suppress(OSError):
-            os.remove(inprog)
-        raise
     # the write phase mutates the LIVE directories: mark the location
     # mutating so readers refuse mid-rebuild and a failure here leaves
     # the torn index LOUD (both markers stranded), never readable. A
@@ -1798,12 +1802,11 @@ def save_base_index(
     mutating = os.path.join(os_path, "_MERGE_MUTATING")
     if not os.path.exists(mutating):
         try:
-            with open(mutating, "w", encoding="utf-8") as fh:
-                fh.write("rebuild in progress; if this file survives, "
-                         "re-run save_base_index(force=True)\n")
+            store_proto.create_marker(
+                mutating, "rebuild in progress; if this file survives, "
+                "re-run save_base_index(force=True)\n",
+            )
         except BaseException:
-            with contextlib.suppress(OSError):
-                os.remove(mutating)
             with contextlib.suppress(OSError):
                 os.remove(inprog)
             raise
@@ -1842,12 +1845,7 @@ def load_base_index(spark, path: str) -> BaseIndex:
     store the caller owns that invariant."""
     import os
 
-    try:
-        path, os_path = _index_paths(path)
-    except AmbiguousIndexPath:
-        raise
-    except ValueError:
-        os_path = None
+    path, os_path = store_proto.local_paths_or_none(path)
     if os_path and os.path.exists(os.path.join(os_path, "_MERGE_MUTATING")):
         raise ValueError(
             f"saved index at {path!r} has a _MERGE_MUTATING marker: a "
@@ -1889,12 +1887,7 @@ def load_saved_bands(spark, path: str):
     exactly as untrustworthy as its other appends."""
     import os
 
-    try:
-        spark_path, os_path = _index_paths(path)
-    except AmbiguousIndexPath:
-        raise
-    except ValueError:
-        spark_path, os_path = path, None
+    spark_path, os_path = store_proto.local_paths_or_none(path)
     if os_path is not None:
         if os.path.exists(os.path.join(os_path, "_MERGE_MUTATING")):
             raise ValueError(
@@ -1948,11 +1941,12 @@ def merge_into_base_index(
         affected docs — base docs sharing >= 1 shingle with the batch
         — under the merged df, keep everyone else's rows untouched
         (their shingles' dfs are unchanged, so their per-doc (df, sh)
-        order is provably identical). The merged index is
-        RELATION-FOR-RELATION equal to a from-scratch rebuild
-        (pinned in tests/test_dedup.py), so the AllPairs prefix
-        guarantee holds exactly. Work is bounded by the postings of
-        the batch's shingles, not the corpus. (On adversarially
+        order is provably identical). Merged into a drift-free index
+        (never stale-merged since its last build or compaction), the
+        result is RELATION-FOR-RELATION equal to a from-scratch
+        rebuild (pinned in tests/test_dedup.py), so the AllPairs
+        prefix guarantee holds exactly. Work is bounded by the
+        postings of the batch's shingles, not the corpus. (On adversarially
         saturated vocabularies — the fixture corpus' 31 words —
         "affected" approaches everyone and this degenerates toward a
         full re-rank; that is a property of the data, and the exact
@@ -1964,9 +1958,13 @@ def merge_into_base_index(
         df snapshots break the single-total-order premise of the
         prefix-filter theorem: the near tier may MISS pairs involving
         stale-ranked docs (the exact tier is digest-joined and
-        unaffected). The contract is periodic rebuild: staleness is
-        bounded by sum(df drift) since the last build/strict-merge,
-        and build_base_index/save_base_index is the compaction.
+        unaffected). A later strict merge does NOT repair this drift:
+        it re-ranks only the docs sharing a shingle with ITS batch and
+        copies every other doc's stale rows forward (pinned in
+        tests/test_dedup.py). The contract is periodic compaction:
+        staleness is bounded by sum(df drift) since the last build or
+        compaction, and compact_saved_index (saved indexes) or
+        build_base_index (in-session) are the only cures.
 
     Lifecycle mirrors build_base_index: tracked=True registers the
     merged relations with the session cache registry; tracked=False
@@ -2114,9 +2112,11 @@ def _delta_prefix(index: BaseIndex, new_sho, df_delta, df_rel, tn: int, td: int)
     the batch's docs, and keep everyone else's saved prefix rows
     untouched. The window's input is bounded by the postings of the
     batch's shingles rather than the corpus (guide §2.3: shuffle fewer
-    bytes into the rank sort). The result is row-for-row equal to
-    _ranked_prefix over ALL shingles under the merged df (pinned by
-    the merge-equals-rebuild tests). On saturated vocabularies
+    bytes into the rank sort). Over a drift-free index the result is
+    row-for-row equal to _ranked_prefix over ALL shingles under the
+    merged df (pinned by the merge-equals-rebuild tests); untouched
+    docs' rows are copied as they are, so drift left by an earlier
+    stale merge survives. On saturated vocabularies
     "affected" can approach every doc and this degenerates to the
     wholesale re-rank plus two bounded semi/anti joins."""
     affected = (
@@ -2170,7 +2170,7 @@ def _admit_receipt(token: str) -> None:
     if parent:
         os.makedirs(parent, exist_ok=True)
     try:
-        fh = open(token, "x", encoding="utf-8")
+        store_proto.create_marker(token, "admission committed\n")
     except FileExistsError:
         raise DuplicateAdmitToken(
             f"commit token {token!r} already exists — the caller must "
@@ -2179,8 +2179,6 @@ def _admit_receipt(token: str) -> None:
             f"checkpoint lineages collides them). Replays of this "
             f"delivery will be skipped by the pre-existing token."
         ) from None
-    with fh:
-        fh.write("admission committed\n")
 
 
 class _SavedIndexMutation:
@@ -2224,26 +2222,18 @@ class _SavedIndexMutation:
         completes, a crash strands the marker and both the next
         writer and load_base_index refuse with a rebuild
         instruction."""
-        import os
-
         if self.mutated:
             raise RuntimeError(
                 "saved-index protocol violation: the mutation window was "
                 "already entered"
             )
-        try:
-            with open(self._mutating, "x", encoding="utf-8") as fh:
-                fh.write("mutation in progress; if this file survives, rebuild\n")
-        except FileExistsError:
-            # not ours to remove: the file predates this writer
-            raise
-        except BaseException:
-            # write/flush failed AFTER the exclusive create: nothing
-            # was mutated yet, so unlink our marker or an intact index
-            # would falsely demand a rebuild
-            with contextlib.suppress(OSError):
-                os.remove(self._mutating)
-            raise
+        # a payload-write failure removes the marker again: nothing
+        # was mutated yet, and an intact index must not demand a
+        # rebuild
+        store_proto.create_marker(
+            self._mutating,
+            "mutation in progress; if this file survives, rebuild\n",
+        )
         self.mutated = True
 
     def swap(self) -> None:
@@ -2297,8 +2287,9 @@ class _SavedIndexMutation:
             raise
         except BaseException:
             # receipt write failed. If a token file nonetheless exists
-            # (exclusive create succeeded, payload write failed),
-            # replays are already skipped and release is safe. If NO
+            # (the create succeeded and removing it after the failed
+            # payload write failed too), replays are already skipped
+            # and release is safe. If NO
             # token exists, a replay would re-classify the batch
             # against the post-admission index — every doc its own
             # exact dup, silently — so strand the markers: that
@@ -2340,8 +2331,8 @@ def _saved_index_mutation(path: str):
     import shutil
 
     # Spark and the os-level guard/swap must act on the byte-exact
-    # same directory; _index_paths yields the canonical local pair.
-    spark_path, os_path = _index_paths(path)
+    # same directory; the store resolver yields the canonical local pair.
+    spark_path, os_path = _saved_index_paths(path)
     mutating = os.path.join(os_path, "_MERGE_MUTATING")
     if os.path.exists(mutating):
         raise ValueError(
@@ -2352,7 +2343,9 @@ def _saved_index_mutation(path: str):
         )
     inprog = os.path.join(os_path, "_MERGE_INPROGRESS")
     try:
-        lock = open(inprog, "x", encoding="utf-8")
+        store_proto.create_marker(
+            inprog, "merge lock; stale + no _MERGE_MUTATING => index intact\n"
+        )
     except FileExistsError:
         raise ValueError(
             f"saved index at {spark_path!r}: _MERGE_INPROGRESS is held — a "
@@ -2362,15 +2355,6 @@ def _saved_index_mutation(path: str):
             f"remove _MERGE_INPROGRESS and any *__new directories, then "
             f"retry"
         ) from None
-    try:
-        with lock:
-            lock.write("merge lock; stale + no _MERGE_MUTATING => index intact\n")
-    except BaseException:
-        # an I/O failure on the informational write must not strand
-        # the freshly-acquired lock
-        with contextlib.suppress(OSError):
-            os.remove(inprog)
-        raise
 
     def _sweep_new_generations():
         # any __new directory under the lock is dead output (this
@@ -2459,8 +2443,11 @@ def merge_into_saved_index(
       (ingest_batch_lsh's check= guard passes across admissions).
     - ``prefix`` with rerank=False: append the new docs' prefix rows
       ranked under the merged df (the stale policy — near-tier recall
-      for drifted base docs degrades until the next strict merge or
-      rebuild; exact tier is rank-free and unaffected).
+      for drifted base docs degrades until compact_saved_index or a
+      rebuild, the only cures: a later strict merge re-ranks only the
+      docs sharing a shingle with its own batch and copies the other
+      docs' drifted rows forward; exact tier is rank-free and
+      unaffected).
     - ``digests`` / ``df``: aggregates keyed by digest/shingle — one
       row per distinct value, the small relations — re-aggregated and
       swapped in as a new generation (plain parquet cannot merge rows
@@ -2652,63 +2639,6 @@ def compact_saved_index(spark, path: str) -> None:
                 f.result()
         mut.enter_mutation_window()
         mut.swap()
-
-
-class AmbiguousIndexPath(ValueError):
-    """A saved-index URI that urlparse would silently truncate
-    ('?'/'#' present): never downgraded to best-effort handling."""
-
-
-def _index_paths(path: str) -> tuple:
-    """(spark_path, os_path) for a local saved-index location, or a
-    loud ValueError for non-local URIs. Accepts plain paths, Windows
-    drive paths (single-letter 'schemes'), and the file:/x /
-    file:///x / file://localhost/x URI forms.
-
-    NO percent-decoding happens anywhere: Hadoop treats %XX in a
-    file: URI literally (verified against pyspark 4.1.2 — writing to
-    'file:/x%20y' creates a directory literally named 'x%20y'), so
-    the os-level side must use the byte-exact same path or every
-    guard silently checks a different directory than Spark mutates.
-    The Spark side gets the canonical 'file:<path>' form: Hadoop
-    rejects the file://localhost authority spelling ('Wrong FS'),
-    and keeping an explicit file: scheme stops a non-file
-    fs.defaultFS from capturing the writes. Plain schemeless paths
-    pass through verbatim for both sides (their defaultFS semantics
-    are the caller's choice, exactly as in save/load)."""
-    import re as _re
-    from urllib.parse import urlparse
-
-    parsed = urlparse(path)
-    if len(parsed.scheme) <= 1:  # plain path or Windows drive letter
-        return path, path
-    if parsed.scheme != "file" or parsed.netloc not in ("", "localhost"):
-        raise ValueError(
-            f"saved-index mutation (merge_into_saved_index / "
-            f"compact_saved_index) uses local filesystem renames; "
-            f"{path!r} is not a local path. On a shared store, write a "
-            f"new generation (build_base_index + save_base_index) or "
-            f"keep the index in a transactional table format."
-        )
-    if parsed.query or parsed.fragment:
-        # urlparse truncates at '?'/'#', but Hadoop treats both
-        # literally in paths — silently operating on the truncated
-        # directory would redirect the whole index. A DISTINCT class:
-        # save/load downgrade generic non-local ValueErrors to
-        # "skip the os-level extras", but this one must surface there
-        # too (swallowing it would skip the crash-marker guard for
-        # exactly the URIs it deems dangerous).
-        raise AmbiguousIndexPath(
-            f"saved-index URI {path!r} contains '?' or '#'; these are "
-            f"literal path bytes to Hadoop but URI separators to this "
-            f"parser — pass the location as a plain path instead"
-        )
-    p = parsed.path
-    if _re.match(r"^/[A-Za-z]:[/\\]", p):  # file:///C:/x
-        # keep the explicit scheme on the Spark side here too (a bare
-        # 'C:/x' re-resolves against fs.defaultFS); os side gets C:/x
-        return "file:" + p, p[1:]
-    return "file:" + p, p
 
 
 def _ingest_exact_tier(batch, index: BaseIndex):

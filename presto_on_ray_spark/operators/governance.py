@@ -282,8 +282,9 @@ def corpus_health_report_saved(spark, sf_dir):
     across invocations — not a fresh mkdtemp per run (ADVICE r13: as
     a registered suite key this is re-run by every bench/correctness
     pass, and per-run mkdtemps accumulated unboundedly). Re-saves
-    publish new generations into the same store and _counts_publish's
-    sweep keeps only the live generation plus its predecessor, so
+    publish new generations into the same store and the publish
+    sweep (store.publish_generation, retaining _COUNTS_RETAIN = 1)
+    keeps only the live generation plus its predecessor, so
     disk stays bounded at ~2 generations no matter how many times the
     key runs. force=True takes over the writer marker a killed prior
     run may have left (safe: the pointer only ever references

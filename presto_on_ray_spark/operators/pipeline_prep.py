@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from presto_on_ray_spark import store as store_proto
 from presto_on_ray_spark.operators._util import t
 from presto_on_ray_spark.suite import query
 
@@ -1438,128 +1439,67 @@ def text_chunking_cdc(spark, sf_dir):
 # The boilerplate artifact's on-disk form. Unlike the dedup base index
 # (five relations, in-place appends under a mutation window), segment
 # counts are ONE vocabulary-sized relation, so every mutation can
-# afford a full fresh generation + atomic pointer flip — the saved-ANN
-# protocol's shape with none of the append machinery: a crash before
-# the flip leaves the old generation live and readable, the partial
-# generation is unreferenced litter the next successful writer sweeps,
-# and there is no torn-append state to diagnose at all.
+# afford a full fresh generation + atomic pointer flip
+# (store.publish_generation) with none of the append machinery: a
+# crash before the flip leaves the old generation live and readable,
+# the partial generation is unreferenced litter the next successful
+# writer sweeps, and there is no torn-append state to diagnose at all.
+# What is counts-specific is only the _BATCHES admission record.
 
+_COUNTS_STORE = "saved segment counts"
 _COUNTS_WRITING = "_COUNTS_WRITING"
-_COUNTS_CURRENT = "_CURRENT"
+_COUNTS_BATCHES = "_BATCHES"  # admitted stream-batch ids, per generation
+# superseded generations each publish keeps: the predecessor, so a
+# lazy reader survives one concurrent commit
+_COUNTS_RETAIN = 1
 
 
 def _counts_paths(path: str) -> tuple:
-    """(spark_path, os_path): the canonical Spark-side form of a LOCAL
-    counts-store location plus its os-level twin (dedup._index_paths
-    handles the file:-URI spellings byte-exactly)."""
-    from presto_on_ray_spark.operators.dedup import _index_paths
-
-    spark_path, os_path = _index_paths(path)
-    if os_path is None:
-        raise ValueError(
-            f"saved segment counts at {path!r}: only local paths are "
-            f"supported — the generation flip is a filesystem rename; on "
-            f"an object store keep counts in a transactional table format"
-        )
-    return spark_path, os_path
+    """(spark_path, os_path) of a LOCAL counts-store location."""
+    return store_proto.local_paths(
+        path, _COUNTS_STORE,
+        "the generation flip is a filesystem rename; on an object store "
+        "keep counts in a transactional table format",
+    )
 
 
-def _counts_acquire(os_path: str, force: bool) -> None:
+def _counts_writer(os_path: str, force: bool):
+    """The store's single-writer marker, released on every exit — the
+    pointer only ever references complete generations, so no failure
+    leaves anything a reader could see torn."""
+    return store_proto.WriterMarker(
+        os_path, _COUNTS_WRITING, _COUNTS_STORE,
+        "If none is live, retry with force=True (the takeover is safe: "
+        "the pointer only ever references complete generations).",
+        force=force,
+    )
+
+
+def _publish_counts(path: str, os_path: str, counts, admitted: frozenset) -> None:
+    """Publish ``counts`` as a fresh generation, with the ``admitted``
+    batch record inside it when non-empty."""
     import os
 
-    os.makedirs(os_path, exist_ok=True)
-    marker = os.path.join(os_path, _COUNTS_WRITING)
-    try:
-        with open(marker, "x", encoding="utf-8") as fh:
-            fh.write("segment-counts writer live\n")
-    except FileExistsError:
-        if not force:
-            raise ValueError(
-                f"saved segment counts at {os_path!r}: {_COUNTS_WRITING} is "
-                f"held — a writer is live or crashed. If none is live, retry "
-                f"with force=True (the takeover is safe: the pointer only "
-                f"ever references complete generations)."
-            ) from None
+    def write(gen: str) -> None:
+        counts.write.mode("overwrite").parquet(f"{path}/{gen}/counts")
+        if admitted:
+            with open(
+                os.path.join(os_path, gen, _COUNTS_BATCHES), "w",
+                encoding="utf-8",
+            ) as fh:
+                fh.write("\n".join(str(b) for b in sorted(admitted)))
+
+    store_proto.publish_generation(os_path, write, _COUNTS_RETAIN)
 
 
-def _counts_release(os_path: str) -> None:
-    import contextlib
-    import os
-
-    with contextlib.suppress(OSError):
-        os.remove(os.path.join(os_path, _COUNTS_WRITING))
-
-
-def _counts_flip(os_path: str, gen: str) -> None:
-    import os
-
-    tmp = os.path.join(os_path, _COUNTS_CURRENT + ".tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(gen)
-    os.replace(tmp, os.path.join(os_path, _COUNTS_CURRENT))
-
-
-def _counts_gen(os_path: str) -> str:
-    import os
-
-    cur = os.path.join(os_path, _COUNTS_CURRENT)
-    if not os.path.exists(cur):
-        raise ValueError(
-            f"saved segment counts at {os_path!r}: no {_COUNTS_CURRENT} "
-            f"pointer — nothing was ever saved here (or the location is "
-            f"not a counts store)"
-        )
-    with open(cur, encoding="utf-8") as fh:
-        return fh.read().strip()
-
-
-def _counts_read_batches(os_path: str, gen: str) -> set:
+def _counts_read_batches(os_path: str, gen: str) -> frozenset:
     import os
 
     f = os.path.join(os_path, gen, _COUNTS_BATCHES)
     if not os.path.exists(f):
-        return set()
+        return frozenset()
     with open(f, encoding="utf-8") as fh:
-        return {int(x) for x in fh.read().split()}
-
-
-def _counts_publish(
-    path: str, os_path: str, counts, admitted: set, relname: str = "counts"
-) -> None:
-    """The shared commit sequence: write a FRESH generation (numbered
-    past every directory on disk, so a crashed writer's partial
-    generation — or its stale _BATCHES file — can never be reused or
-    republished), flip, then sweep every generation except the new one
-    and its immediate predecessor. Keeping the predecessor gives
-    concurrent lazy readers a one-mutation grace window; a crashed
-    writer's partial dir is unreferenced litter removed by the next
-    successful commit. ``relname`` is the relation's directory name
-    inside the generation — "counts" for the segment-counts store,
-    "weights" for the classifier-weights store (r14); the protocol is
-    relation-agnostic."""
-    import contextlib
-    import os
-    import shutil
-
-    existing = [
-        n for n in os.listdir(os_path)
-        if n.startswith("gen-") and n[4:].isdigit()
-    ]
-    cur = None
-    if os.path.exists(os.path.join(os_path, _COUNTS_CURRENT)):
-        cur = _counts_gen(os_path)
-    nxt = f"gen-{max((int(n[4:]) for n in existing), default=-1) + 1}"
-    counts.write.mode("overwrite").parquet(f"{path}/{nxt}/{relname}")
-    if admitted:
-        with open(
-            os.path.join(os_path, nxt, _COUNTS_BATCHES), "w", encoding="utf-8"
-        ) as fh:
-            fh.write("\n".join(str(b) for b in sorted(admitted)))
-    _counts_flip(os_path, nxt)
-    for n in existing:
-        if n not in (nxt, cur):
-            with contextlib.suppress(OSError):
-                shutil.rmtree(os.path.join(os_path, n))
+        return frozenset(int(x) for x in fh.read().split())
 
 
 def save_segment_counts(
@@ -1567,25 +1507,20 @@ def save_segment_counts(
 ) -> None:
     """Save a (h, df) counts relation as a fresh generation under
     ``path`` and flip the _CURRENT pointer atomically. Single-writer
-    (``_COUNTS_WRITING`` marker; ``force=True`` takes over a crashed
-    writer). A rebuild onto a STREAM-FED store carries the live
-    generation's admitted-batch record forward by default — dropping
-    it would re-open the exactly-once window (a re-delivered batch
-    would merge twice); pass ``reset_batches=True`` only when the new
-    counts deliberately start a fresh admission lineage."""
-    import os
-
+    (``_COUNTS_WRITING`` marker, released on every exit; ``force=True``
+    takes over a crashed writer's). A rebuild onto a STREAM-FED store
+    carries the live generation's admitted-batch record forward by
+    default — dropping it would re-open the exactly-once window (a
+    re-delivered batch would merge twice); pass ``reset_batches=True``
+    only when the new counts deliberately start a fresh admission
+    lineage."""
     path, os_path = _counts_paths(path)
-    _counts_acquire(os_path, force)
-    try:
-        admitted: set = set()
-        if not reset_batches and os.path.exists(
-            os.path.join(os_path, _COUNTS_CURRENT)
-        ):
-            admitted = _counts_read_batches(os_path, _counts_gen(os_path))
-        _counts_publish(path, os_path, counts, admitted)
-    finally:
-        _counts_release(os_path)
+    with _counts_writer(os_path, force):
+        admitted: frozenset = frozenset()
+        live = store_proto.current_generation(os_path)
+        if not reset_batches and live is not None:
+            admitted = _counts_read_batches(os_path, live)
+        _publish_counts(path, os_path, counts, admitted)
 
 
 class StaleSegmentCounts(ValueError):
@@ -1602,51 +1537,22 @@ def counts_live_generation(path: str) -> str:
     expect_generation to guard against concurrent merges (see
     governance.corpus_health_report_from_counts)."""
     _, os_path = _counts_paths(path)
-    return _counts_gen(os_path)
+    return store_proto.current_generation(os_path, _COUNTS_STORE)
 
 
 def load_segment_counts(spark, path: str):
     """Read the live generation's (h, df) relation. No marker check is
     needed (the pointer flips atomically onto complete generations
     only) and readers get a ONE-mutation grace window: each commit
-    keeps the immediately superseded generation on disk, so a lazy
-    plan bound here survives one concurrent merge/save but fails with
-    a missing-file error if it outlives two — re-load for long-lived
-    handles. (The dedup index's in-place appends need the stronger
-    marker protocol; this store's full generations do not.)"""
+    keeps the immediately superseded generation on disk
+    (_COUNTS_RETAIN), so a lazy plan bound here survives one
+    concurrent merge/save but fails with a missing-file error if it
+    outlives two — re-load for long-lived handles. (The dedup index's
+    in-place appends need the stronger marker protocol; this store's
+    full generations do not.)"""
     path, os_path = _counts_paths(path)
-    return spark.read.parquet(f"{path}/{_counts_gen(os_path)}/counts")
-
-
-def save_relation_generation(
-    rel, path: str, relname: str, force: bool = False
-) -> None:
-    """Generic generation-flip save — the counts store's single-writer
-    commit protocol (acquire marker → fresh numbered generation →
-    atomic pointer flip → sweep all but current+predecessor) for ANY
-    small maintained relation. The classifier-weights store
-    (textstats.save_classifier_weights) is the first non-counts user;
-    no admitted-batch record is kept (that machinery is specific to
-    the streaming counts admit loop)."""
-    path, os_path = _counts_paths(path)
-    _counts_acquire(os_path, force)
-    try:
-        _counts_publish(path, os_path, rel, set(), relname=relname)
-    finally:
-        _counts_release(os_path)
-
-
-def load_relation_generation(
-    spark, path: str, relname: str, generation: str | None = None
-):
-    """Read a generation-flip store's relation: the LIVE generation by
-    default, or a caller-pinned ``generation`` directly (TOCTOU-free —
-    see load_segment_counts_generation; the one-mutation grace window
-    keeps the superseded generation readable through one concurrent
-    commit)."""
-    path, os_path = _counts_paths(path)
-    gen = generation if generation is not None else _counts_gen(os_path)
-    return spark.read.parquet(f"{path}/{gen}/{relname}")
+    gen = store_proto.current_generation(os_path, _COUNTS_STORE)
+    return spark.read.parquet(f"{path}/{gen}/counts")
 
 
 def load_segment_counts_generation(spark, path: str, generation: str):
@@ -1658,13 +1564,9 @@ def load_segment_counts_generation(spark, path: str, generation: str):
     silently binds the plan to the NEW generation while the caller
     believes the pin held. Binding to the pinned directory directly is
     safe for exactly one concurrent mutation — each commit keeps the
-    immediately superseded generation on disk (the reader grace window
-    _counts_publish maintains)."""
+    immediately superseded generation on disk (_COUNTS_RETAIN)."""
     path, _ = _counts_paths(path)
     return spark.read.parquet(f"{path}/{generation}/counts")
-
-
-_COUNTS_BATCHES = "_BATCHES"  # admitted stream-batch ids, per generation
 
 
 def admitted_count_batches(path: str) -> frozenset:
@@ -1673,14 +1575,10 @@ def admitted_count_batches(path: str) -> frozenset:
     record travels INSIDE the generation directory, so it is published
     by the same atomic flip as the counts themselves — see
     stream_segment_counts_admit."""
-    import os
-
     _, os_path = _counts_paths(path)
-    f = os.path.join(os_path, _counts_gen(os_path), _COUNTS_BATCHES)
-    if not os.path.exists(f):
-        return frozenset()
-    with open(f, encoding="utf-8") as fh:
-        return frozenset(int(x) for x in fh.read().split())
+    return _counts_read_batches(
+        os_path, store_proto.current_generation(os_path, _COUNTS_STORE)
+    )
 
 
 def merge_into_saved_segment_counts(
@@ -1707,18 +1605,15 @@ def merge_into_saved_segment_counts(
     index's in-place appends must bridge with a commit-token
     handshake)."""
     path, os_path = _counts_paths(path)
-    _counts_acquire(os_path, force)
-    try:
-        cur = _counts_gen(os_path)
+    with _counts_writer(os_path, force):
+        cur = store_proto.current_generation(os_path, _COUNTS_STORE)
         admitted = _counts_read_batches(os_path, cur)
         if admit_batch_id is not None:
-            admitted.add(int(admit_batch_id))
+            admitted |= {int(admit_batch_id)}
         merged = merge_segment_counts(
             spark.read.parquet(f"{path}/{cur}/counts"), batch, w
         )
-        _counts_publish(path, os_path, merged, admitted)
-    finally:
-        _counts_release(os_path)
+        _publish_counts(path, os_path, merged, admitted)
 
 
 # -- temperature-scaled source mixing -----------------------------------

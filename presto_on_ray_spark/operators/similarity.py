@@ -19,6 +19,7 @@ from typing import NamedTuple
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from presto_on_ray_spark import store as store_proto
 from presto_on_ray_spark.caching import tracked_persist
 from presto_on_ray_spark.operators._util import t
 from presto_on_ray_spark.suite import query
@@ -1867,8 +1868,8 @@ def similarity_ivfpq_lifecycle_rebuild(spark, sf_dir):
             store,
             force=True,
         )
-        _, os_path, _ = _ann_paths(store)
-        gen_before = _ann_current_gen(os_path)
+        _, os_path = store_proto.local_paths_or_none(store)
+        gen_before = store_proto.current_generation(os_path)
         # (4a) the rebuild's index relations depend only on the corpus
         # relation v — never on the store the merge mutates — so they
         # materialize CONCURRENTLY with the growth episode (guide §2.6
@@ -1894,7 +1895,7 @@ def similarity_ivfpq_lifecycle_rebuild(spark, sf_dir):
             )
         # (4) rebuild at the corpus's own auto sizing; publish = new gen
         save_ann_index(rebuilt_ix, store, force=True)
-        gen_after = _ann_current_gen(os_path)
+        gen_after = store_proto.current_generation(os_path)
         if gen_after == gen_before:
             raise AssertionError(
                 f"lifecycle: rebuild did not flip the generation "
@@ -1971,26 +1972,35 @@ def similarity_ivfpq_refined_topk(spark, sf_dir):
 #     {path}/gen-K/{cents,codebook,codes}
 #     {path}/_ANN_WRITING        exclusive single-writer marker
 #
-# Every save and compact writes a COMPLETE new generation and then
-# atomically repoints _CURRENT (os.replace) — the live generation is
-# never mutated in place, so there is no mixed-generation state, no
-# multi-directory swap window, and recovery never has to reconstruct a
-# half-swapped index: a crash before the flip leaves the old pointer
-# valid (the orphan directory is swept by the next writer), a crash
-# after the flip leaves the new generation complete. The ONLY in-place
-# mutation is merge's codes APPEND inside the current generation, which
-# is why readers refuse while the writer marker is up. Failures before
-# any byte is committed release the marker cleanly; failures that may
-# have committed bytes strand it — torn states are loud, never silently
-# readable. The lifecycle mirrors the dedup side's saved index where
-# semantics match (single-writer lock, loud stranding, scheduled
-# verify) and is deliberately lighter where they don't: ANN quantizers
-# are frozen sample-trained artifacts, so append is the only
-# incremental mutation — no re-rank analogue, no staleness dial.
+# Every save and compact publishes a COMPLETE new generation through
+# the shared store protocol (store.publish_generation: write, atomic
+# _CURRENT flip, sweep) — the live generation is never mutated in
+# place, so there is no mixed-generation state and recovery never has
+# to reconstruct a half-swapped index. The ONLY in-place mutation is
+# merge's codes APPEND inside the current generation, which is why
+# readers refuse while the writer marker is up. Failures before any
+# byte is committed release the marker cleanly; failures that may
+# have committed bytes strand it — torn states are loud, never
+# silently readable. The lifecycle mirrors the dedup side's saved
+# index where semantics match (single-writer lock, loud stranding,
+# scheduled verify) and is deliberately lighter where they don't: ANN
+# quantizers are frozen sample-trained artifacts, so append is the
+# only incremental mutation — no re-rank analogue, no staleness dial.
 # ---------------------------------------------------------------------------
 _ANN_RELATIONS = ("cents", "codebook", "codes")
+_ANN_STORE = "saved ANN index"
 _ANN_WRITING = "_ANN_WRITING"
-_ANN_CURRENT = "_CURRENT"
+# superseded generations each publish keeps: none — readers holding a
+# lazy plan across a publish must reload (load_ann_index's contract)
+_ANN_RETAIN = 0
+_ANN_RECOVERY = (
+    "If no writer is live, the one-call recovery is "
+    "compact_saved_ann_index(force=True, drop_torn=True): it writes a "
+    "complete new generation (dropping torn vectors if any — a no-op on "
+    "a clean index) and flips atomically, then sweeps the orphans. "
+    "save_ann_index(force=True) with a rebuilt index is the full-rebuild "
+    "alternative."
+)
 
 
 class TornAnnCodes(ValueError):
@@ -2004,77 +2014,10 @@ class TornAnnCodes(ValueError):
     dispatches on instead of a bare ValueError match."""
 
 
-def _ann_paths(path: str):
-    """(spark_path, os_path, locked) — local paths get the full
-    generational protocol; non-local stores get (path, None, False):
-    a flat relation layout written with plain overwrites, no marker,
-    no generations (there is no os-level atomic pointer there), and
-    the caller owns single-writer discipline. merge/compact require
-    the local protocol, same as the dedup side's mutation paths."""
-    from presto_on_ray_spark.operators.dedup import (
-        AmbiguousIndexPath,
-        _index_paths,
+def _ann_writer(os_path: str, force: bool = False):
+    return store_proto.WriterMarker(
+        os_path, _ANN_WRITING, _ANN_STORE, _ANN_RECOVERY, force=force
     )
-
-    try:
-        spark_path, os_path = _index_paths(path)
-        return spark_path, os_path, True
-    except AmbiguousIndexPath:
-        raise
-    except ValueError:
-        return path, None, False
-
-
-def _ann_marker(os_path: str):
-    import os
-
-    return os.path.join(os_path, _ANN_WRITING)
-
-
-def _ann_acquire(os_path: str, what: str, force: bool = False):
-    """Exclusive-create the writer marker; loud when already held.
-    ``force=True`` removes a pre-existing marker first — the takeover
-    path for a STRANDED marker (crashed writer), valid only when the
-    caller has established no writer is live."""
-    import os
-
-    os.makedirs(os_path, exist_ok=True)
-    if force:
-        try:
-            os.remove(_ann_marker(os_path))
-        except FileNotFoundError:
-            pass
-    try:
-        fd = os.open(_ann_marker(os_path), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        os.close(fd)
-    except FileExistsError:
-        raise ValueError(
-            f"saved ANN index at {os_path!r}: {_ANN_WRITING} is held — "
-            f"a writer is live or crashed mid-{what}. If no writer is "
-            f"live, the one-call recovery is compact_saved_ann_index("
-            f"force=True, drop_torn=True): it writes a complete new "
-            f"generation (dropping torn vectors if any — a no-op on a "
-            f"clean index) and flips atomically, then sweeps the "
-            f"orphans. save_ann_index(force=True) with a rebuilt index "
-            f"is the full-rebuild alternative."
-        )
-
-
-def _ann_release(os_path: str):
-    import os
-
-    os.remove(_ann_marker(os_path))
-
-
-def _ann_current_gen(os_path: str):
-    """The live generation name, or None when no flip has happened."""
-    import os
-
-    try:
-        with open(os.path.join(os_path, _ANN_CURRENT)) as f:
-            return f.read().strip()
-    except FileNotFoundError:
-        return None
 
 
 def _ann_resolve_gen(os_path: str, path: str) -> str:
@@ -2085,7 +2028,7 @@ def _ann_resolve_gen(os_path: str, path: str) -> str:
     missing index."""
     import os
 
-    gen = _ann_current_gen(os_path)
+    gen = store_proto.current_generation(os_path)
     if gen is not None:
         return gen
     if all(
@@ -2093,94 +2036,15 @@ def _ann_resolve_gen(os_path: str, path: str) -> str:
     ):
         raise ValueError(
             f"saved ANN index at {path!r} uses the flat relation "
-            f"layout ({_ANN_CURRENT} missing but cents/codebook/"
+            f"layout ({store_proto.CURRENT} missing but cents/codebook/"
             f"codes directories present) — read the relations "
             f"directly with spark.read.parquet and re-save with "
             f"save_ann_index to adopt the generational protocol."
         )
     raise ValueError(
-        f"no saved ANN index at {path!r}: {_ANN_CURRENT} is missing "
+        f"no saved ANN index at {path!r}: {store_proto.CURRENT} is missing "
         f"(no save ever completed its atomic flip here)."
     )
-
-
-def _ann_flip(os_path: str, gen: str):
-    """Atomically repoint _CURRENT at ``gen``: write-aside, fsync the
-    tmp file, os.replace, fsync the directory — readers see the old
-    complete generation or the new complete generation, never anything
-    else, and the pointer survives a power loss at any step (an
-    unflushed replace could otherwise surface empty or stale after
-    reboot). Durability caveat, stated once: the parquet DATA files
-    are flushed by Spark/OS page-cache policy, not fsynced here — full
-    power-loss durability for the data needs the filesystem's
-    guarantees (or a transactional table format), same as every other
-    parquet sink in this engine."""
-    import os
-
-    tmp = os.path.join(os_path, _ANN_CURRENT + "__tmp")
-    with open(tmp, "w") as f:
-        f.write(gen)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(os_path, _ANN_CURRENT))
-    try:
-        # directory fsync is best-effort ONLY for portability: opening
-        # a directory read-only is not universal (PermissionError on
-        # Windows, ENOTSUP/EINVAL on some filesystems), and the flip
-        # itself already committed — failing the save for that would
-        # report a completed commit as a failure. A REAL fsync error
-        # (EIO: the rename may not be durable) is not silently
-        # swallowed: it degrades the power-loss guarantee and says so.
-        dfd = os.open(os_path, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-    except OSError as exc:
-        import errno
-        import warnings
-
-        if exc.errno not in (errno.ENOTSUP, errno.EINVAL, errno.EACCES,
-                             errno.EPERM, errno.EISDIR):
-            warnings.warn(
-                f"saved ANN index at {os_path!r}: directory fsync after "
-                f"the pointer flip failed ({exc}) — the flip committed "
-                f"but may not survive an immediate power loss",
-                stacklevel=2,
-            )
-
-
-def _ann_next_gen(os_path: str) -> str:
-    """Next generation directory name: one past the highest existing
-    gen-K (orphans from crashed writers count — reusing their number
-    would write into a dirty directory)."""
-    import os
-    import re
-
-    best = 0
-    for name in os.listdir(os_path) if os.path.isdir(os_path) else []:
-        m = re.fullmatch(r"gen-(\d+)", name)
-        if m:
-            best = max(best, int(m.group(1)))
-    return f"gen-{best + 1}"
-
-
-def _ann_sweep_orphans(os_path: str, keep: str):
-    """Remove every gen-* directory except ``keep`` (crashed writers'
-    litter and superseded generations) and any _CURRENT__tmp. Runs
-    only under the writer marker and only AFTER a successful flip, so
-    the swept directories are provably unreferenced."""
-    import os
-    import re
-    import shutil
-
-    for name in os.listdir(os_path):
-        if name != keep and re.fullmatch(r"gen-\d+", name):
-            shutil.rmtree(os.path.join(os_path, name))
-    try:
-        os.remove(os.path.join(os_path, _ANN_CURRENT + "__tmp"))
-    except FileNotFoundError:
-        pass
 
 
 def _load_ann_relations(spark, rel_root: str) -> AnnIndex:
@@ -2214,32 +2078,14 @@ def _ann_write_relations(index: AnnIndex, base: str) -> None:
             f.result()
 
 
-def _ann_commit_generation(index: AnnIndex, spark_path: str, os_path: str):
-    """THE generation-commit sequence, shared by save and compact so
-    their crash semantics can never drift: write every relation into a
-    fresh gen directory, flip _CURRENT atomically, sweep superseded/
-    orphan generations. The caller owns the marker and the
-    release-vs-strand decision around this call; a failure BEFORE the
-    flip leaves the pointer on the old generation (the partial gen
-    directory is unreferenced litter the next successful commit
-    sweeps). The post-flip orphan sweep is BEST-EFFORT: once the flip
-    committed, a sweep failure (EBUSY, NFS silly-rename, permissions)
-    must not report the committed generation as a failed write — the
-    litter waits for the next successful commit instead."""
-    import warnings
-
-    gen = _ann_next_gen(os_path)
-    _ann_write_relations(index, f"{spark_path}/{gen}")
-    _ann_flip(os_path, gen)
-    try:
-        _ann_sweep_orphans(os_path, keep=gen)
-    except OSError as exc:
-        warnings.warn(
-            f"saved ANN index at {os_path!r}: generation {gen} committed "
-            f"but the orphan sweep failed ({exc}) — superseded gen-* "
-            f"directories remain until the next successful commit",
-            stacklevel=3,
-        )
+def _ann_publish(index: AnnIndex, spark_path: str, os_path: str) -> None:
+    """Publish ``index`` as the next generation (shared by save and
+    compact, so their crash semantics cannot drift)."""
+    store_proto.publish_generation(
+        os_path,
+        lambda gen: _ann_write_relations(index, f"{spark_path}/{gen}"),
+        _ANN_RETAIN,
+    )
 
 
 def save_ann_index(index: AnnIndex, path: str, force: bool = False) -> None:
@@ -2249,25 +2095,20 @@ def save_ann_index(index: AnnIndex, path: str, force: bool = False) -> None:
     index loaded FROM this very path can be saved back onto it (the
     write never touches the directories it is reading), a failure
     before the flip releases the marker with the old generation
-    untouched, and the orphan sweep runs only after the flip. Refuses
+    untouched, and the sweep runs only after the flip. Refuses
     while the marker is held unless ``force=True`` (the crashed-writer
     takeover). Non-local paths get plain flat overwrite writes with no
     marker or generations: the store's atomicity and the caller's
     single-writer discipline apply."""
-    spark_path, os_path, locked = _ann_paths(path)
-    if not locked:
+    spark_path, os_path = store_proto.local_paths_or_none(path)
+    if os_path is None:
         _ann_write_relations(index, spark_path)
         return
-    _ann_acquire(os_path, "save", force=force)
-    try:
-        _ann_commit_generation(index, spark_path, os_path)
-    except BaseException:
-        # the pointer never moved: the old generation (if any) is
-        # intact, and the partial gen directory is unreferenced litter
-        # the next writer sweeps
-        _ann_release(os_path)
-        raise
-    _ann_release(os_path)
+    # any failure releases the marker: before the flip the old
+    # generation (if any) is intact and the partial gen directory is
+    # unreferenced litter the next writer sweeps
+    with _ann_writer(os_path, force):
+        _ann_publish(index, spark_path, os_path)
 
 
 def load_ann_index(spark, path: str) -> AnnIndex:
@@ -2287,10 +2128,10 @@ def load_ann_index(spark, path: str) -> AnnIndex:
     read the flat layout (see save_ann_index)."""
     import os
 
-    spark_path, os_path, locked = _ann_paths(path)
-    if not locked:
+    spark_path, os_path = store_proto.local_paths_or_none(path)
+    if os_path is None:
         return _load_ann_relations(spark, spark_path)
-    if os.path.exists(_ann_marker(os_path)):
+    if os.path.exists(os.path.join(os_path, _ANN_WRITING)):
         raise ValueError(
             f"saved ANN index at {path!r}: {_ANN_WRITING} is held — a "
             f"writer is live or crashed. If no writer is live, the "
@@ -2383,10 +2224,11 @@ def merge_into_saved_ann_index(
     re-merge the batch with ``resume=True``, which anti-joins away the
     ids the crashed merge already committed (a plain re-merge would
     trip the duplicate guard on them)."""
+    import contextlib
     import os
 
-    spark_path, os_path, locked = _ann_paths(path)
-    if not locked:
+    spark_path, os_path = store_proto.local_paths_or_none(path)
+    if os_path is None:
         raise ValueError(
             f"merge_into_saved_ann_index requires the local generational "
             f"protocol; {path!r} is not a local path — encode with "
@@ -2394,9 +2236,8 @@ def merge_into_saved_ann_index(
             f"single-writer discipline) in the store's own transaction "
             f"layer, or save a new generation with save_ann_index."
         )
-    _ann_acquire(os_path, "merge")
-    codes_os = None
-    try:
+    # guard and plan failures release the marker: nothing was written
+    with _ann_writer(os_path) as marker:
         gen = _ann_resolve_gen(os_path, path)
         rel_root = f"{spark_path}/{gen}"
         codes_os = os.path.join(os_path, gen, "codes")
@@ -2432,28 +2273,29 @@ def merge_into_saved_ann_index(
                 )
         _ann_batch_guard(index, batch_v, path, skip_hit=resume)
         new_codes = encode_into_ann_index(batch_v, index)
-    except BaseException:
-        _ann_release(os_path)  # nothing written: clean release
-        raise
-    before = _ann_data_files(codes_os)
-    try:
-        new_codes.write.mode("append").parquet(f"{rel_root}/codes")
-    except Exception:
-        # an ordinary failure means the Spark job ABORTED before this
-        # exception surfaced; confirm via the listing and release —
-        # a cleanly-aborted job commits nothing
-        if _ann_data_files(codes_os) == before:
-            _ann_release(os_path)
-        # else: data files appeared — genuinely torn, strand the marker
-        raise
-    except BaseException:
-        # KeyboardInterrupt/SystemExit interrupt the PY4J CALL, not
-        # necessarily the JVM job — it can still be running and commit
-        # AFTER a listing check passed, so the only safe answer is to
-        # strand the marker (recovery: compact(force=True,
-        # drop_torn=True) once the job is known dead)
-        raise
-    _ann_release(os_path)
+        before = _ann_data_files(codes_os)
+        try:
+            new_codes.write.mode("append").parquet(f"{rel_root}/codes")
+        except Exception:
+            # an ordinary failure means the Spark job ABORTED before
+            # this exception surfaced; a cleanly-aborted job commits
+            # nothing, so release — unless the listing shows data files
+            # appeared (genuinely torn) or cannot be taken: strand
+            torn = True
+            with contextlib.suppress(OSError):
+                torn = _ann_data_files(codes_os) != before
+            if torn:
+                marker.strand()
+            raise
+        except BaseException:
+            # KeyboardInterrupt/SystemExit interrupt the PY4J CALL, not
+            # necessarily the JVM job — it can still be running and
+            # commit AFTER a listing check passed, so the only safe
+            # answer is to strand the marker (recovery:
+            # compact(force=True, drop_torn=True) once the job is known
+            # dead)
+            marker.strand()
+            raise
 
 
 def _ann_data_files(codes_os: str):
@@ -2630,15 +2472,17 @@ def compact_saved_ann_index(
     marker releases and the old generation stays live, exactly as it
     was). Failures before the flip always leave the old generation
     untouched."""
-    spark_path, os_path, locked = _ann_paths(path)
-    if not locked:
+    spark_path, os_path = store_proto.local_paths_or_none(path)
+    if os_path is None:
         raise ValueError(
             f"compact_saved_ann_index requires the local generational "
             f"protocol; {path!r} is not a local path — rewrite a new "
             f"generation with save_ann_index instead."
         )
-    _ann_acquire(os_path, "compact", force=force)
-    try:
+    # failures before the flip release the marker: the old generation
+    # is intact, and partial new-generation litter is unreferenced and
+    # swept by the next successful writer
+    with _ann_writer(os_path, force) as marker:
         gen = _ann_resolve_gen(os_path, path)
         index = _load_ann_relations(spark, f"{spark_path}/{gen}")
         try:
@@ -2646,6 +2490,9 @@ def compact_saved_ann_index(
             keep = index
         except TornAnnCodes:
             if not drop_torn:
+                # refused a torn index: the marker STAYS — it is the
+                # only thing keeping the torn state loud
+                marker.strand()
                 raise
             good = (
                 _ann_code_stats(index.codes)
@@ -2656,18 +2503,7 @@ def compact_saved_ann_index(
                 index.cents, index.codebook, index.codes.join(good, "vec_id")
             )
             verify_ann_index(keep)  # non-droppable corruption still raises
-        _ann_commit_generation(keep, spark_path, os_path)
-    except TornAnnCodes:
-        # refused a torn index (drop_torn=False): the marker STAYS —
-        # it is the only thing keeping the torn state loud
-        raise
-    except BaseException:
-        # the pointer never moved: old generation intact, partial
-        # new-generation litter is unreferenced and swept by the next
-        # successful writer
-        _ann_release(os_path)
-        raise
-    _ann_release(os_path)
+        _ann_publish(keep, spark_path, os_path)
 
 
 # ---------------------------------------------------------------------------

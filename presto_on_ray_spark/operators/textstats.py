@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from presto_on_ray_spark import store as store_proto
 from presto_on_ray_spark.operators._util import t
 from presto_on_ray_spark.suite import query
 
@@ -1062,49 +1063,70 @@ def text_classifier_distilled(spark, sf_dir):
 
 # -- published-weights store (round 14) -----------------------------------
 # VERDICT r13 #4 + What's-wrong #5: a deployment reads PUBLISHED
-# weights, it does not retrain per query. The store is the counts/ANN
-# generation-flip protocol (pipeline_prep.save_relation_generation):
-# train → publish flips _CURRENT onto a fresh numbered generation;
-# scorers read the live generation (streaming: per trigger, so a
-# mid-stream publish changes verdicts exactly at a trigger boundary —
-# pinned in tests/test_classifier_store.py) or pin one for
-# reproducibility. Model rollback = pointing at the kept predecessor.
+# weights, it does not retrain per query. The store is the shared
+# generation-flip protocol (store.publish_generation): train → publish
+# flips _CURRENT onto a fresh numbered generation; scorers read the
+# live generation (streaming: per trigger, so a mid-stream publish
+# changes verdicts exactly at a trigger boundary — pinned in
+# tests/test_classifier_store.py) or pin one for reproducibility.
+# Model rollback = pointing at the kept predecessor.
 
 _WEIGHTS_REL = "weights"
+_WEIGHTS_STORE = "classifier weights store"
+# the marker keeps the counts store's name: the weights store was
+# first published through the counts code, and a marker stranded by
+# that code must still block
+_WEIGHTS_WRITING = "_COUNTS_WRITING"
+_WEIGHTS_RETAIN = 1  # keep the predecessor: the reader grace window
+
+
+def _weights_paths(path: str) -> tuple:
+    return store_proto.local_paths(
+        path, _WEIGHTS_STORE,
+        "the generation flip is a filesystem rename; on an object store "
+        "keep the weights in a transactional table format",
+    )
 
 
 def save_classifier_weights(weights, path: str, force: bool = False) -> None:
     """Publish a trained (bucket, wnum) relation as a fresh generation
     of the weights store at ``path`` (atomic _CURRENT flip,
-    single-writer marker, predecessor kept for the reader grace
-    window)."""
-    from presto_on_ray_spark.operators.pipeline_prep import (
-        save_relation_generation,
-    )
-
-    save_relation_generation(weights, path, _WEIGHTS_REL, force=force)
+    single-writer marker released on every exit, predecessor kept for
+    the reader grace window; ``force=True`` takes over a crashed
+    writer's marker)."""
+    path, os_path = _weights_paths(path)
+    with store_proto.WriterMarker(
+        os_path, _WEIGHTS_WRITING, _WEIGHTS_STORE,
+        "If none is live, retry with force=True (the takeover is safe: "
+        "the pointer only ever references complete generations).",
+        force=force,
+    ):
+        store_proto.publish_generation(
+            os_path,
+            lambda gen: weights.write.mode("overwrite").parquet(
+                f"{path}/{gen}/{_WEIGHTS_REL}"
+            ),
+            _WEIGHTS_RETAIN,
+        )
 
 
 def load_classifier_weights(spark, path: str, generation: str | None = None):
     """Read the live generation's weights (or a pinned ``generation``
     directly — the TOCTOU-free read for callers that captured
-    weights_live_generation())."""
-    from presto_on_ray_spark.operators.pipeline_prep import (
-        load_relation_generation,
-    )
-
-    return load_relation_generation(spark, path, _WEIGHTS_REL, generation)
+    weights_live_generation(); the kept predecessor stays readable
+    through one concurrent publish)."""
+    path, os_path = _weights_paths(path)
+    if generation is None:
+        generation = store_proto.current_generation(os_path, _WEIGHTS_STORE)
+    return spark.read.parquet(f"{path}/{generation}/{_WEIGHTS_REL}")
 
 
 def weights_live_generation(path: str) -> str:
     """The live generation id of a weights store (the _CURRENT
     pointer's value) — capture it when deriving anything from the
     store; a later save flips it."""
-    from presto_on_ray_spark.operators.pipeline_prep import (
-        counts_live_generation,
-    )
-
-    return counts_live_generation(path)
+    _, os_path = _weights_paths(path)
+    return store_proto.current_generation(os_path, _WEIGHTS_STORE)
 
 
 @query("text_classifier_published", oracle=_DISTILLED_ORACLE)

@@ -113,13 +113,14 @@ def stream_ann_ingest_with_rebuild(
     index; when the corpus has outgrown the frozen quantizers' design
     population (ratio > ``growth_factor``) AND the rebuild cooldown
     has expired, rebuild at auto_ivf_cells over the FULL vector store
-    and publish the new generation (atomic flip; NOTE the ANN store
-    keeps ONLY the live generation — the post-flip sweep removes the
-    superseded one, unlike the counts store's one-mutation grace
-    window — so a reader holding a lazy plan bound before the flip
-    fails loudly on its next action and must reload, exactly
-    load_ann_index's documented "readers coordinate with writers"
-    contract; this loop inherits it rather than changing it).
+    and publish the new generation (store.publish_generation's atomic
+    flip; NOTE the ANN store keeps ONLY the live generation — its
+    publishes retain no superseded generation (similarity._ANN_RETAIN
+    = 0), unlike the counts store's one-generation grace window — so
+    a reader holding a lazy plan bound before the flip fails loudly on
+    its next action and must reload, exactly load_ann_index's
+    documented "readers coordinate with writers" contract; this loop
+    inherits it rather than changing it).
 
     ``vectors_source`` is a callable ``spark -> (vec_id, qv)`` over
     the WHOLE vector corpus: a rebuild re-trains quantizers and
@@ -132,9 +133,10 @@ def stream_ann_ingest_with_rebuild(
     batch (each rebuild is a full corpus pass — the expensive,
     scheduled operation; the per-trigger advice read is two bounded
     aggregates). State (triggers since last rebuild) lives in
-    ``<index>/_REBUILD_STATE`` so a restarted stream resumes its
-    cooldown phase; the file is outside the generation protocol's
-    namespace (gen-*/_CURRENT/_ANN_WRITING) and invisible to it.
+    ``<index>/_REBUILD_STATE``, replaced atomically
+    (store.atomic_write), so a restarted stream resumes its cooldown
+    phase; the file is outside the generation protocol's namespace
+    (gen-*/_CURRENT/_ANN_WRITING) and invisible to it.
 
     ``on_rebuild(advice_dict)`` fires after each publish — the
     observability hook a scheduler logs/alerts on."""
@@ -142,16 +144,16 @@ def stream_ann_ingest_with_rebuild(
     import os
 
     from presto_on_ray_spark.operators.similarity import (
-        _ann_paths,
         ann_rebuild_advice,
         auto_ivf_cells,
         build_ann_index,
         load_ann_index,
         save_ann_index,
     )
+    from presto_on_ray_spark.store import atomic_write, local_paths_or_none
 
-    _, os_path, locked = _ann_paths(index_path)
-    if not locked:
+    _, os_path = local_paths_or_none(index_path)
+    if os_path is None:
         raise ValueError(
             "stream_ann_ingest_with_rebuild requires the local "
             "generational protocol (rebuilds publish generations); "
@@ -166,10 +168,7 @@ def stream_ann_ingest_with_rebuild(
         return None
 
     def _write_since(n: int | None) -> None:
-        tmp = state_file + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump({"since_rebuild": n}, fh)
-        os.replace(tmp, state_file)
+        atomic_write(state_file, json.dumps({"since_rebuild": n}))
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -499,6 +498,7 @@ def rebuild_semantic_cells(
     from presto_on_ray_spark.operators.similarity import (
         semantic_probe_dial,
     )
+    from presto_on_ray_spark.store import atomic_write
 
     store = spark.read.parquet(store_path).select("vec_id", "qv")
     if store.isEmpty():
@@ -530,26 +530,24 @@ def rebuild_semantic_cells(
             store, tau=tau, target_recall=target_recall,
             cents=spark.read.parquet(cents_path),
         )
-        tmp = probe_os + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump({"nprobe": dial["nprobe"],
-                       "target_recall": target_recall}, fh)
-        os.replace(tmp, probe_os)
+        atomic_write(probe_os, json.dumps({"nprobe": dial["nprobe"],
+                                           "target_recall": target_recall}))
         out = dict(out, probe_dial=dial)
     return out
 
 
 def _probe_os_path(store_path: str) -> str | None:
     """OS-level path of the ``_probe`` sidecar, via the same
-    local-vs-remote mapping as the saved indexes (_ann_paths handles
-    file:-URI spellings); None for non-local stores, where the
-    sidecar protocol (atomic rename) does not exist."""
+    local-vs-remote mapping as the saved stores
+    (store.local_paths_or_none handles file:-URI spellings); None for
+    non-local stores, where the sidecar protocol (atomic rename) does
+    not exist."""
     import os
 
-    from presto_on_ray_spark.operators.similarity import _ann_paths
+    from presto_on_ray_spark.store import local_paths_or_none
 
-    _, os_path, locked = _ann_paths(store_path)
-    if not locked:
+    _, os_path = local_paths_or_none(store_path)
+    if os_path is None:
         return None
     return os.path.join(os_path, "_probe")
 

@@ -305,6 +305,7 @@ def stream_classifier_retrain_windowed(
         load_classifier_weights,
         save_classifier_weights,
     )
+    from presto_on_ray_spark.store import atomic_write
 
     if retrain is None:
         def retrain(window_docs: DataFrame) -> DataFrame:  # noqa: F811
@@ -320,10 +321,7 @@ def stream_classifier_retrain_windowed(
 
     def _write_state(st: dict) -> None:
         os.makedirs(window_path, exist_ok=True)
-        tmp = state_file + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(st, fh)
-        os.replace(tmp, state_file)
+        atomic_write(state_file, json.dumps(st))
 
     def _tick(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 from presto_on_ray_spark.operators.dedup import (
     BaseIndex,
     _admit_receipt,
-    _index_paths,
+    _saved_index_paths,
     ingest_batch,
     load_base_index,
     merge_into_saved_index,
@@ -213,7 +213,7 @@ def stream_ingest_admit(
     import inspect
     import os
 
-    index_spark_path, index_os_path = _index_paths(index_path)
+    index_spark_path, index_os_path = _saved_index_paths(index_path)
     tokens = admit_log if admit_log is not None else os.path.join(
         index_os_path, "_ADMITTED"
     )

@@ -226,6 +226,7 @@ def test_saved_counts_crash_before_flip_leaves_old_generation(
 ):
     import pytest
 
+    from presto_on_ray_spark import store
     from presto_on_ray_spark.operators import pipeline_prep as pp
 
     df_a = spark.createDataFrame([(0, "x y z w")], "doc_id long, text string")
@@ -237,7 +238,7 @@ def test_saved_counts_crash_before_flip_leaves_old_generation(
     def boom(os_path, gen):
         raise OSError("simulated crash before flip")
 
-    monkeypatch.setattr(pp, "_counts_flip", boom)
+    monkeypatch.setattr(store, "flip_current", boom)
     with pytest.raises(OSError, match="simulated crash"):
         pp.merge_into_saved_segment_counts(spark, p, df_b, 4)
     monkeypatch.undo()

@@ -765,6 +765,67 @@ def test_merge_into_saved_index_stale_appends_prefix(spark, tmp_path):
     assert got[40] == ("new", 0)
 
 
+def test_strict_merge_after_stale_copies_drift_forward(spark, tmp_path):
+    """A strict merge re-ranks only the docs sharing a shingle with
+    ITS batch (_delta_prefix), so prefix drift an earlier rerank=False
+    merge left on any other doc is copied forward unchanged — the
+    strict merge does not repair it. compact_saved_index is the cure:
+    afterwards the index equals build_base_index relation by
+    relation."""
+    from presto_on_ray_spark.operators.dedup import (
+        BaseIndex,
+        build_base_index,
+        compact_saved_index,
+        load_base_index,
+        merge_into_saved_index,
+        save_base_index,
+    )
+
+    ten, base, admitted, batch = _merge_fixture(spark)
+    p = str(tmp_path / "bidx")
+    idx = build_base_index(base, tracked=False)
+    save_base_index(idx, p)
+    idx.release()
+    merge_into_saved_index(spark, p, admitted, rerank=False)
+    stale = sorted(map(tuple, load_base_index(spark, p).prefix.collect()))
+
+    # doc 8 shares shingles with base doc 2 only; docs 1, 3, 4 and 5
+    # share none with it
+    second = spark.createDataFrame(
+        [(8, "p q r s t fresh words appear here now")],
+        "doc_id int, text string",
+    )
+    merge_into_saved_index(spark, p, second)
+    strict = sorted(map(tuple, load_base_index(spark, p).prefix.collect()))
+    untouched = {1, 3, 4, 5}
+
+    def rows_of(rows):
+        return [r for r in rows if r[0] in untouched]
+
+    assert rows_of(strict) == rows_of(stale)
+
+    full_rows = (
+        base.collect()
+        + [r for r in admitted.collect() if r["text"]]
+        + second.collect()
+    )
+    rebuilt = build_base_index(
+        spark.createDataFrame(full_rows, base.schema), tracked=False
+    )
+    try:
+        want_prefix = sorted(map(tuple, rebuilt.prefix.collect()))
+        # the stale merge's drift survived the strict merge
+        assert rows_of(strict) != rows_of(want_prefix)
+        compact_saved_index(spark, p)
+        compacted = load_base_index(spark, p)
+        for name in BaseIndex._fields:
+            got = sorted(map(tuple, getattr(compacted, name).collect()))
+            want = sorted(map(tuple, getattr(rebuilt, name).collect()))
+            assert got == want, f"compacted.{name} != rebuilt.{name}"
+    finally:
+        rebuilt.release()
+
+
 def test_merge_guards_fail_loud(spark, tmp_path):
     """The corruption paths a production admit loop can actually hit
     must error, never silently double-count: re-admitting doc_ids
